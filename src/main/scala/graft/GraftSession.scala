@@ -35,6 +35,17 @@ object GraftSession {
       // distinct queries wants the same headroom; 2000 entries of generated
       // classes is a few hundred MB of metaspace at worst.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // default 32: a read over more root paths (or a dir with more
+      // subdirs) lists them in a Spark job (`InMemoryFileIndex` parallel
+      // listing). A file-stream source's getBatch reads each micro-batch's
+      // files as root paths, so every warehouse batch carrying >32 files
+      // paid that job between two batches (0.26–0.33 s at ~60 files).
+      // Measured on local[4], local FS, median of 9 reads with an explicit
+      // schema: 64 paths 592 ms as a job vs 41 ms listed serially, 256
+      // paths 1052 vs 55 ms, 1024 paths 3453 vs 122 ms. The warehouse's
+      // getBatch+latestOffset went from 0.56 to 0.10 s per batch. A store
+      // with a slow per-path listing (object stores) may want it lower.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 

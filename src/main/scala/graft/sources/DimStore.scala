@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Keyed dimension store — the Spark rendering of the reference's
   * Phoenix/HBase dim tables + Redis cache (S8/S9:
@@ -44,16 +45,41 @@ class DimStore(spark: SparkSession, basePath: String,
   private def numBuckets: Int =
     spark.conf.get("spark.graft.dim.buckets", "16").toInt
 
-  /** Per-table superset of every on-disk bucket's columns (r15): seeded
-    * from a one-time mergeSchema pass over all bucket dirs, refreshed to
-    * each staged write's union schema (which by construction contains the
-    * previous cache, hence every untouched bucket). Lets steady-state
-    * upserts read touched buckets with an explicit schema — zero
-    * per-batch footer inference. The store is single-writer, so no other
-    * process can widen a bucket behind the cache.
+  /** Per-table superset of every on-disk bucket's columns, kept ON DISK in
+    * the `_graft_schema` sidecar (schema JSON): seeded from a one-time
+    * mergeSchema pass over all bucket dirs, rewritten to each staged
+    * write's union schema (which contains the previous sidecar, hence
+    * every untouched bucket) BEFORE the staging is marked complete. Lets
+    * upserts and `read` use an explicit schema — zero per-batch footer
+    * inference. Being on disk rather than per instance, it stays exact
+    * when several `DimStore` instances (or processes) take turns writing
+    * one table: a column one writer adds is seen by the next upsert of
+    * every other writer. Reading it costs one small file read per upsert.
     */
-  private val bucketSchemaCache =
-    scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
+  private def schemaFile(table: String) =
+    java.nio.file.Paths.get(s"${path(table)}/_graft_schema")
+
+  private def readSchema(table: String): Option[StructType] = {
+    val f = schemaFile(table)
+    if (java.nio.file.Files.exists(f))
+      Some(DataType.fromJson(new String(java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType])
+    else None
+  }
+
+  /** Replace the sidecar atomically, so a reader never sees a torn file. */
+  private def writeSchema(table: String, schema: StructType): Unit = {
+    val f = schemaFile(table)
+    val tmp = f.resolveSibling("_graft_schema.tmp")
+    java.nio.file.Files.write(tmp, schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.move(tmp, f, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    ()
+  }
+
+  /** Parquet read with the sidecar schema when the table has one. */
+  private def readParquet(table: String, paths: Seq[String]): DataFrame =
+    readSchema(table).fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
 
   /** Bucket of a key value: hash of a CANONICAL string form so the same
     * logical key buckets identically whatever numeric type a batch arrives
@@ -87,13 +113,52 @@ class DimStore(spark: SparkSession, basePath: String,
   private def bucketOf(df: DataFrame, keyCol: String, nb: Int) =
     pmod(xxhash64(canonicalKey(df, keyCol)), lit(nb.toLong)).cast("int")
 
+  /** The bucket `upsert` places a row of `df` in, by its `keyCol` value —
+    * the one expression callers precomputing touched buckets must use.
+    */
+  def bucket(df: DataFrame, keyCol: String): Column = bucketOf(df, keyCol, numBuckets)
+
+  /** Plan several tables' upserts in ONE Spark job: `routed` carries the
+    * target table name in `tableCol`, and `keyCols` maps each table to its
+    * key column. Returns, per table with rows, its row count and the
+    * sorted buckets its keys hash into — pass those to `upsert` as
+    * `touched` (the caller's size guard reads the counts before any
+    * write). Each partition counts its own (table, bucket) pairs and the
+    * driver sums them: at most partitions × tables × buckets small rows
+    * come back, and no shuffle stage (an extra job under AQE) is planned.
+    */
+  def plan(routed: DataFrame, tableCol: String,
+           keyCols: Map[String, String]): Map[String, DimStore.Touched] =
+    if (keyCols.isEmpty) Map.empty
+    else {
+      import spark.implicits._
+      val b = keyCols.foldLeft(lit(null).cast("int")) { case (acc, (t, k)) =>
+        when(col(tableCol) === t, bucket(routed, k)).otherwise(acc)
+      }
+      val partials = routed.filter(col(tableCol).isin(keyCols.keys.toSeq: _*))
+        .select(col(tableCol), b).as[(String, Int)]
+        .mapPartitions { it =>
+          val n = scala.collection.mutable.HashMap[(String, Int), Long]()
+          it.foreach(k => n(k) = n.getOrElse(k, 0L) + 1)
+          n.iterator
+        }.collect()
+      partials.groupBy(_._1._1).map { case (t, ps) =>
+        t -> DimStore.Touched(ps.map(_._2).sum, ps.map(_._1._2).distinct.toSeq.sorted)
+      }
+    }
+
   /** Last-write-wins collapse shared by the upsert merge and the
     * mixed-layout read: highest `versionCol` per `keyCol` wins, version
-    * ties broken deterministically by a whole-row hash.
+    * ties broken deterministically by a hash of every upserted column. A
+    * frame carrying `graft_bucket` is windowed per (bucket, key): the
+    * bucket is a function of the key, so the groups are the same, and a
+    * frame already hash-partitioned by the bucket needs no second shuffle.
     */
   private def dedupLatest(df: DataFrame, keyCol: String, versionCol: String): DataFrame = {
-    val rowHash = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(versionCol).desc, rowHash.asc)
+    val rowHash = xxhash64(df.columns.filterNot(_ == "graft_bucket").map(col).toIndexedSeq: _*)
+    val part = if (df.columns.contains("graft_bucket")) Seq(col("graft_bucket"), col(keyCol))
+               else Seq(col(keyCol))
+    val w = Window.partitionBy(part: _*).orderBy(col(versionCol).desc, rowHash.asc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
@@ -173,8 +238,9 @@ class DimStore(spark: SparkSession, basePath: String,
     * whole-row hash so repeated runs of the same input converge).
     *
     * Only the key-hash buckets present in the batch are merged and
-    * rewritten — in ONE Spark job: the batch plus the touched buckets'
-    * current rows are unioned, collapsed last-write-wins, and written to a
+    * rewritten — in ONE Spark job after one shuffle: the batch plus the
+    * touched buckets' current rows are unioned, hash-partitioned by bucket,
+    * collapsed last-write-wins within each partition, and written to a
     * staging dir `partitionBy(graft_bucket)`; each staged bucket dir is
     * then swapped into place with a driver-side atomic rename. (The
     * previous rendering looped the buckets sequentially — two jobs per
@@ -187,10 +253,17 @@ class DimStore(spark: SparkSession, basePath: String,
     * ignores the `_`-prefixed staging dir and unions a COMPLETED staging
     * back in, so the store is never unreadable or lossy in the window.
     *
+    * `touched` is the batch's bucket set when the caller already knows it
+    * (from `plan`); otherwise the store collects it, one more Spark job. A
+    * staged bucket outside `touched` fails the upsert before the staging is
+    * marked complete: swapping it in would drop the rows the merge never
+    * read from that bucket.
+    *
     * A store written by the pre-bucket flat layout is migrated in the same
     * one pass (every bucket rewritten once, flat files then removed).
     */
-  def upsert(table: String, batch: DataFrame, keyCol: String, versionCol: String): Unit = {
+  def upsert(table: String, batch: DataFrame, keyCol: String, versionCol: String,
+             touched: Option[Seq[Int]] = None): Unit = {
     recoverStaged(table)
     val nb = numBuckets
     val tableDir = new java.io.File(path(table))
@@ -211,77 +284,91 @@ class DimStore(spark: SparkSession, basePath: String,
     writeMeta(table, keyCol, versionCol) // before any bucket write: a crash
     // mid-migration must leave enough metadata for read() to collapse the
     // mixed layout it creates
-    val batchB = batch.withColumn("__b", bucketOf(batch, keyCol, nb))
-    // touched buckets: driver-side collect bounded by numBuckets
-    val touched: Seq[Int] = phase("touched_collect") {
+    val buckets: Seq[Int] =
       if (legacy.isDefined) 0 until nb
-      else batchB.select(col("__b")).distinct().collect().map(_.getInt(0)).toSeq.sorted
-    }
-    // ONE multi-path read for every touched bucket: a per-bucket
-    // spark.read.parquet pays driver-side footer/schema inference per
-    // bucket (~45 ms × buckets × tables — measured as HALF the remaining
-    // per-batch dim floor in BENCH_STREAM's dim_phase_bucket_open), while
-    // one read over the path list infers once and lists once. r15: the
-    // merged schema is CACHED per table, so steady-state batches read
-    // with an explicit schema and pay NO footer inference at all — the
-    // remaining bucket_open cost after the r14 multi-path fold was
-    // exactly that per-batch mergeSchema pass. The cache seeds from ALL
-    // bucket dirs (not just touched — a column living only in an
-    // untouched bucket must survive into the superset) and is refreshed
-    // to the staged write's union schema below, so it is always a
-    // superset of every on-disk bucket; parquet nulls the gaps of files
-    // missing a cached column exactly like mergeSchema did. Buckets can
-    // still legitimately differ in schema (an upsert batch with new
-    // columns rewrites only ITS buckets).
-    val bucketExisting: Option[DataFrame] = phase("bucket_open") {
-      val paths = touched.map(i => s"${path(table)}/graft_bucket=$i")
-        .filter(p => new java.io.File(p).exists)
-      if (paths.isEmpty) None
-      else {
-        val sch = bucketSchemaCache.getOrElseUpdate(table, {
-          val allDirs = Option(tableDir.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.isDirectory && f.getName.startsWith("graft_bucket="))
-            .map(_.getPath).toIndexedSeq
-          org.apache.spark.sql.types.StructType(
-            spark.read.option("mergeSchema", "true").parquet(allDirs: _*)
-              .schema.filterNot(_.name == "graft_bucket"))
-        })
-        Some(spark.read.schema(sch).parquet(paths: _*))
+      else touched.getOrElse(phase("touched_collect") {
+        // driver-side collect bounded by numBuckets
+        batch.select(bucketOf(batch, keyCol, nb)).distinct().collect().map(_.getInt(0)).toSeq.sorted
+      })
+    // `known`: superset of every on-disk bucket's columns — the sidecar,
+    // seeded ONCE from ALL bucket dirs (not just touched — a column living
+    // only in an untouched bucket must survive into the superset); None
+    // before the first bucket exists. Then ONE multi-path read for every
+    // touched bucket: a per-bucket spark.read.parquet pays driver-side
+    // footer/schema inference per bucket (~45 ms × buckets × tables —
+    // measured as HALF the remaining per-batch dim floor in BENCH_STREAM's
+    // dim_phase_bucket_open), while one read over the path list infers
+    // once and lists once; with the explicit superset schema steady-state
+    // batches pay NO footer inference at all. Parquet nulls the gaps of
+    // files missing a column exactly like mergeSchema did. Buckets can
+    // legitimately differ in schema (an upsert batch with new columns
+    // rewrites only ITS buckets).
+    val sidecar = readSchema(table)
+    val (known, bucketExisting) = phase("bucket_open") {
+      val known: Option[StructType] = sidecar.orElse {
+        val allDirs = Option(tableDir.listFiles()).getOrElse(Array.empty)
+          .filter(f => f.isDirectory && f.getName.startsWith("graft_bucket="))
+          .map(_.getPath).toIndexedSeq
+        if (allDirs.isEmpty) None
+        else Some(StructType(spark.read.option("mergeSchema", "true").parquet(allDirs: _*)
+          .schema.filterNot(_.name == "graft_bucket")))
       }
+      val paths = buckets.map(i => s"${path(table)}/graft_bucket=$i")
+        .filter(p => new java.io.File(p).exists)
+      (known, if (paths.isEmpty) None else Some(spark.read.schema(known.get).parquet(paths: _*)))
     }
-    // merge WITHOUT the bucket column so the dedup tie-break hash sees
-    // exactly the upserted schema (the bucket is re-derived afterwards —
-    // it is a pure function of the key, so rows land where they came from)
-    val merged = (Seq(batchB.drop("__b")) ++ bucketExisting.toSeq ++ legacy.toSeq)
+    val merged = (Seq(batch) ++ bucketExisting.toSeq ++ legacy.toSeq)
       .reduce(_.unionByName(_, allowMissingColumns = true))
-    val deduped = dedupLatest(merged, keyCol, versionCol)
-    val staged = deduped.withColumn("graft_bucket", bucketOf(deduped, keyCol, nb))
+    // ONE shuffle: hash-partition by the bucket, then dedup per (bucket,
+    // key) — the partitioning already satisfies the window's clustering,
+    // so no second exchange is planned, and each bucket lives in one
+    // partition, so `partitionBy` writes exactly one file per bucket: the
+    // bucket is this store's unit of rewrite (at 100 TB you raise
+    // spark.graft.dim.buckets, not the per-bucket file count). The
+    // tie-break hash covers exactly the upserted columns, not the bucket,
+    // so winners are those of a key-partitioned dedup. At most one task
+    // per core: a task holding several buckets still writes one file per
+    // bucket (its rows arrive sorted by bucket), and every task beyond the
+    // cores only adds its own commit. Measured on the streaming warehouse
+    // (4 cores, 16 buckets, two dims upserting side by side): the previous
+    // shape — a dedup shuffle by key, then a second shuffle into 16
+    // partitions — ran 3 jobs per upsert; this shape runs 2, and one task
+    // per core instead of 16 cut the batch's tasks from 73 to 49 and the
+    // dashboard's p90 by a fifth at equal freshness (CHANGES.md has the
+    // A/B pairs and the ablation).
+    val staged = dedupLatest(
+      merged.withColumn("graft_bucket", bucketOf(merged, keyCol, nb))
+        .repartition(math.min(nb, spark.sparkContext.defaultParallelism), col("graft_bucket")),
+      keyCol, versionCol)
+    // the touched buckets ARE the staged schema; untouched ones ⊆ `known`.
+    // Nullable throughout, as a file read returns it, so an unchanged
+    // column set leaves the sidecar byte-identical.
+    val stagedFields = staged.schema.filterNot(_.name == "graft_bucket")
+    val schema = StructType((stagedFields ++ known.toSeq.flatMap(_.fields)
+      .filterNot(f => stagedFields.exists(_.name == f.name))).map(_.copy(nullable = true)))
     val tmp = s"${path(table)}/_tmp_upsert"
     phase("staged_write") {
-      // repartition ON the partition column first: the dedup window leaves
-      // the frame hash-partitioned by key (32 shuffle partitions), and
-      // `partitionBy` from that layout writes up to 32 files PER BUCKET —
-      // each an output-task file commit. One partition per bucket writes
-      // exactly one file per bucket: the bucket is this store's unit of
-      // rewrite (at 100 TB you raise spark.graft.dim.buckets, not the
-      // per-bucket file count). This shape is the measured floor: the
-      // round-14 A/B probe (`ProbeDimWrite`) recorded 0.47 s/upsert
-      // median isolated, with the v2 file-output committer at 0.50 and a
-      // single-task dynamic write at 0.56 — the cost is Spark job fixed
-      // overhead, not task commits, so neither variant is kept.
-      staged.repartition(nb, col("graft_bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("graft_bucket").parquet(tmp)
+      staged.write.mode(SaveMode.Overwrite).partitionBy("graft_bucket").parquet(tmp)
+      val stray = Option(new java.io.File(tmp).list()).getOrElse(Array.empty[String])
+        .filter(_.startsWith("graft_bucket="))
+        .map(_.stripPrefix("graft_bucket=").toInt).filterNot(buckets.toSet)
+      if (stray.nonEmpty) {
+        rmTree(tmp)
+        throw new IllegalStateException(s"dim upsert of $table staged buckets " +
+          s"${stray.sorted.mkString(",")} outside the touched set ${buckets.mkString(",")}: " +
+          "touched buckets must come from DimStore.bucket/plan under the same bucket count")
+      }
+      // the sidecar before the sentinel: once the staging counts as
+      // complete (and may be swapped in by a recovery), the sidecar
+      // already covers its columns
+      if (!sidecar.contains(schema)) writeSchema(table, schema)
       // the store's own completion sentinel, independent of the committer
       // conf (see stagedComplete) — written only once the job returned
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$tmp/_graft_staged_ok"), Array.empty[Byte])
     }
-    // refresh the schema cache to the staged union (⊇ old cache ⊇ every
-    // untouched bucket; the touched buckets ARE this schema)
-    bucketSchemaCache.put(table, org.apache.spark.sql.types.StructType(
-      staged.schema.filterNot(_.name == "graft_bucket")))
     phase("swap") {
-      touched.foreach { i =>
+      buckets.foreach { i =>
         val src = new java.io.File(s"$tmp/graft_bucket=$i")
         // a touched bucket always stages ≥1 row (the batch's rows hash there
         // and dedup keeps one row per key); absent src = genuinely empty
@@ -315,7 +402,9 @@ class DimStore(spark: SparkSession, basePath: String,
 
   /** Whole-store read: partition discovery over the bucket directories;
     * the synthetic `graft_bucket` partition column is dropped so callers see
-    * exactly the upserted schema.
+    * exactly the upserted schema. The `_graft_schema` sidecar is the read
+    * schema when present, so a column living only in some buckets is not
+    * lost to single-footer schema inference.
     *
     * A store caught in the crashed-migration window — flat leftover files
     * next to bucket directories — is readable too: a directory-path read
@@ -367,7 +456,7 @@ class DimStore(spark: SparkSession, basePath: String,
             liveBuckets.map(_.getPath).toSeq, flat.map(_.getPath).toSeq,
             stagedDirs.map(_.getPath).toSeq)
             .filter(_.nonEmpty)
-            .map(ps => spark.read.parquet(ps: _*))
+            .map(ps => readParquet(table, ps))
           val merged = parts.reduce(_.unionByName(_, allowMissingColumns = true))
           readMeta(table) match {
             case Some((keyCol, versionCol)) => dedupLatest(merged, keyCol, versionCol)
@@ -375,7 +464,7 @@ class DimStore(spark: SparkSession, basePath: String,
             // (the next upsert's retry collapses it)
             case None => merged
           }
-        } else spark.read.parquet(path(table))
+        } else readParquet(table, Seq(path(table)))
       Some(if (df.columns.contains("graft_bucket")) df.drop("graft_bucket") else df)
     }
   }
@@ -385,6 +474,13 @@ class DimStore(spark: SparkSession, basePath: String,
     */
   def lookup(table: String, keyCol: String, key: Any): Array[org.apache.spark.sql.Row] =
     read(table).map(_.filter(col(keyCol) === lit(key)).collect()).getOrElse(Array.empty)
+}
+
+object DimStore {
+  /** One table's share of an upsert plan: its batch row count and the
+    * sorted buckets its keys hash into.
+    */
+  final case class Touched(rows: Long, buckets: Seq[Int])
 }
 
 /** S5 analog: dynamic per-row topic routing

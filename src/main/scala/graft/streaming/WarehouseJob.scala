@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.LogPipeline
@@ -37,6 +38,20 @@ import graft.sources.{DimStore, Topics}
   * fact fan-out is the reference's own at-least-once dynamic producer —
   * `Topics.writeBatchDynamic`, topic per row — with idempotent consumers
   * downstream, matching `MyKafkaUtil.java:37`.)
+  *
+  * One micro-batch runs these Spark jobs, in order (11 in a steady batch
+  * of the default config with two dim tables; each job's fixed cost, not
+  * its rows, sets the batch's wall time, so a new job on this path has to
+  * pay for itself):
+  *  1. dirty: the dirty-row write, which also materializes the persisted
+  *     batch (1 job);
+  *  2. route+plan: the config broadcast, the routed frame's cache build and
+  *     `DimStore.plan` — every dim table's row count (the misroute guard,
+  *     checked before any write) and touched buckets in one pass (3 jobs);
+  *  3. facts: the fact fan-out write (1 job);
+  *  4. dim ×2: the dim upserts, concurrently — one shuffle and one staged
+  *     write each (2 jobs per table);
+  *  5. stats: the A1 windowed aggregate and its write (2 jobs).
   *
   * Stats-sink contract: rows in `stats/` are PER-BATCH PARTIALS keyed by
   * (stt, edt, event_type) — the reference's incremental ClickHouse appends
@@ -116,6 +131,23 @@ class WarehouseJob(spark: SparkSession, outDir: String,
     */
   @volatile private var profRecord: (String, Double) => Unit = (_, _) => ()
 
+  /** Runs a batch's dim upserts concurrently. Owned by the job rather than
+    * `ExecutionContext.global`: a pool thread inherits the Spark local
+    * properties (job group, streaming batch id, description) of the thread
+    * that created it and keeps them, so upsert jobs on the global pool
+    * carried the batch id of whichever batch first spawned the thread.
+    * Tasks are submitted through `SQLExecution.withThreadLocalCaptured`,
+    * which runs each under the submitting stream thread's properties.
+    * Idle threads exit, so a stopped query leaves none behind.
+    */
+  private lazy val upsertPool: java.util.concurrent.ExecutorService = {
+    val p = new java.util.concurrent.ThreadPoolExecutor(4, 4, 30L,
+      java.util.concurrent.TimeUnit.SECONDS, new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => { val t = new Thread(r, "graft-dim-upsert"); t.setDaemon(true); t })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+
   def start(sourceTopic: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val dims = new DimStore(spark, s"$outDir/dim",
       (name, sec) => profRecord(s"dim_phase_$name", sec))
@@ -167,6 +199,42 @@ class WarehouseJob(spark: SparkSession, outDir: String,
           val r = clean.join(broadcast(cfg.drop("sink_pk", "sink_columns")),
             col("event_type") === col("source_type")).persist()
           routed = Some(r)
+
+          // S8/S9: dim sinks, honoring each config row's (pk, columns) —
+          // `TableProcessFunction.java:66-122`. The DATA never reaches the
+          // driver (keyed distributed upsert); only config rows do.
+          // Config validation stays sequential (loud, deterministic errors).
+          val dimPlans = cfgRows.filter(_.getAs[String]("sink_type") == "hbase").map { c =>
+            val table = c.getAs[String]("sink_table")
+            val pk = c.getAs[String]("sink_pk")
+            // null-safe BEFORE split: a NULL sink_columns must hit the
+            // loud config-error message below, not an NPE
+            val cols = Option(c.getAs[String]("sink_columns"))
+              .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+              .getOrElse(Seq.empty)
+            require(pk != null && cols.contains(pk),
+              s"dim config for $table: sink_pk '$pk' must be one of sink_columns " +
+                s"'${cols.mkString(",")}' (both non-null)")
+            (table, pk, cols)
+          }
+          // Route+plan: ONE aggregate over the routed frame (its first
+          // action, so it also builds the cache) gives every dim table its
+          // row count (the misroute guard) and its touched buckets (the
+          // upsert's bucket set), so neither the guard nor the upserts run
+          // a job of their own for them.
+          val touched: Map[String, DimStore.Touched] =
+            if (dimPlans.isEmpty) Map.empty
+            else timed("dim_counts") {
+              dims.plan(r.filter(col("sink_type") === "hbase"), "sink_table",
+                dimPlans.map { case (table, pk, _) => table -> pk }.toMap)
+            }
+          dimPlans.foreach { case (table, _, _) =>
+            val n = touched.get(table).fold(0L)(_.rows)
+            require(n <= maxDimBatchRows,
+              s"dim batch for $table has $n rows (> $maxDimBatchRows): " +
+                "fact-sized stream routed to a dim sink — check the routing config")
+          }
+
           timed("facts_write") {
             if (topics.resolvedBroker.isDefined)
               // S5 kafka mode: the reference's dynamic at-least-once producer
@@ -181,60 +249,32 @@ class WarehouseJob(spark: SparkSession, outDir: String,
                 .parquet(s"$staging/facts") // S5: dynamic per-row topic
           }
 
-          // S8/S9: dim sinks, honoring each config row's (pk, columns) —
-          // `TableProcessFunction.java:66-122`. The DATA never reaches the
-          // driver (keyed distributed upsert); only config rows do.
-          // Misroute guard: ONE job counts every dim table's slice (the
-          // per-table count() loop was one sequential job per table).
-          val dimCfgs = cfgRows.filter(_.getAs[String]("sink_type") == "hbase")
-          val dimCounts: Map[String, Long] =
-            if (dimCfgs.isEmpty) Map.empty
-            else timed("dim_counts") {
-              r.filter(col("sink_type") === "hbase")
-                .groupBy(col("sink_table")).agg(count(lit(1)).as("n"))
-                .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+          // The upserts run CONCURRENTLY: each targets its own table dir
+          // (independent state), and the cores have idle slots while one
+          // small upsert's jobs run — the reference writes its dims from
+          // parallel Phoenix sink subtasks for the same reason. Each task
+          // carries this thread's Spark local properties (see
+          // `upsertPool`). Failures fail the batch, but only after EVERY
+          // upsert has finished (success or failure): leaving a sibling
+          // upsert running while the batch fails would let a same-JVM
+          // restart's replayed upsert race the orphan on the shared
+          // staging dir and the bucket renames.
+          val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+          val upserts = dimPlans.flatMap { case (table, pk, cols) =>
+            touched.get(table).map { t =>
+              SQLExecution.withThreadLocalCaptured(session, upsertPool) {
+                timed(s"dim_upsert_$table") {
+                  dims.upsert(table,
+                    r.filter(col("sink_table") === table).select(cols.map(col): _*),
+                    pk, "ts", Some(t.buckets))
+                }
+              }
             }
-          // config validation stays sequential (loud, deterministic errors)…
-          val dimPlans = dimCfgs.map { c =>
-              val table = c.getAs[String]("sink_table")
-              val pk = c.getAs[String]("sink_pk")
-              // null-safe BEFORE split: a NULL sink_columns must hit the
-              // loud config-error message below, not an NPE
-              val cols = Option(c.getAs[String]("sink_columns"))
-                .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-                .getOrElse(Seq.empty)
-              require(pk != null && cols.contains(pk),
-                s"dim config for $table: sink_pk '$pk' must be one of sink_columns " +
-                  s"'${cols.mkString(",")}' (both non-null)")
-              val n = dimCounts.getOrElse(table, 0L)
-              require(n <= maxDimBatchRows,
-                s"dim batch for $table has $n rows (> $maxDimBatchRows): " +
-                  "fact-sized stream routed to a dim sink — check the routing config")
-              (table, pk, cols, n)
-            }
-          // …the upserts themselves run CONCURRENTLY: each targets its own
-          // table dir (independent state), and local[32] has idle slots
-          // while one small upsert's two jobs run — the reference writes
-          // its dims from parallel Phoenix sink subtasks for the same
-          // reason. Failures fail the batch, but only after EVERY future
-          // has finished (success or failure): leaving a sibling upsert
-          // running while the batch fails would let a same-JVM restart's
-          // replayed upsert race the orphan on the shared staging dir and
-          // the bucket renames.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          val upserts = dimPlans.filter(_._4 > 0).map { case (table, pk, cols, _) =>
-            Future(timed(s"dim_upsert_$table") {
-              dims.upsert(table,
-                r.filter(col("sink_table") === table).select(cols.map(col): _*),
-                pk, "ts")
-            })
           }
-          val settled = Await.result(
-            Future.sequence(upserts.toSeq.map(_.transform(scala.util.Success(_)))),
-            Duration.Inf)
-          settled.foreach(_.get) // rethrows the first failure — all settled
+          upserts.map(f => scala.util.Try(f.get())).foreach { // all settled
+            case scala.util.Failure(e: java.util.concurrent.ExecutionException) => throw e.getCause
+            case t => t.get
+          }
 
           // DWS: A1 visitor stats over the clean stream (per-batch PARTIAL
           // rows keyed by (stt,edt,event_type) — see class doc contract).

@@ -194,4 +194,61 @@ class DimStoreSpec extends SparkSpecBase {
     assert(row3b.length == 1 && row3b.head.getAs[Long]("ts") == 9L)
     assert(allBuckets().count() == 64)
   }
+
+  test("two instances interleaving upserts keep the column one of them adds") {
+    // the bucket-schema superset lives in the store (`_graft_schema`), not
+    // per instance: `b` learned the schema before `a` added `w`, and its
+    // next upsert of key 3's bucket must not read that bucket without `w`
+    import spark.implicits._
+    val base = Files.createTempDirectory("dimstore_two_writers").toString
+    val a = new DimStore(spark, base)
+    val b = new DimStore(spark, base)
+    a.upsert("t", (0L until 64L).map(k => (k, 1L, s"v$k")).toDF("k", "ts", "v"), "k", "ts")
+    b.upsert("t", Seq((5L, 2L, "v5b")).toDF("k", "ts", "v"), "k", "ts")
+    a.upsert("t", Seq((3L, 5L, "v3a", "extra3")).toDF("k", "ts", "v", "w"), "k", "ts")
+    b.upsert("t", Seq((3L, 2L, "v3-stale")).toDF("k", "ts", "v"), "k", "ts")
+    val r = b.read("t").get
+    assert(r.columns.contains("w"), "the column a added must survive b's rewrite of its bucket")
+    assert(r.count() == 64 && r.select("k").distinct().count() == 64)
+    val row3 = r.filter(col("k") === 3L).collect()
+    assert(row3.length == 1 && row3.head.getAs[Long]("ts") == 5L &&
+      row3.head.getAs[String]("w") == "extra3")
+    assert(r.filter(col("k") === 5L).collect().head.getAs[String]("v") == "v5b")
+  }
+
+  test("planned touched buckets match the store's placement for Long, Double and Decimal keys") {
+    // the warehouse plans touched buckets in its own job (`plan`) and the
+    // upsert trusts them: the same logical key must land in one bucket
+    // whatever numeric type a batch carries it as
+    import spark.implicits._
+    val base = Files.createTempDirectory("dimstore_planned").toString
+    val store = new DimStore(spark, base)
+    val keys = 0L until 64L
+    val batches = Seq(
+      keys.map(k => (k, 1L, s"long$k")).toDF("k", "ts", "v"),
+      keys.map(k => (k.toDouble, 2L, s"double$k")).toDF("k", "ts", "v"),
+      keys.map(k => (BigDecimal(k).setScale(2), 3L, s"dec$k")).toDF("k", "ts", "v"))
+    batches.foreach { df =>
+      val plan = store.plan(df.withColumn("t", lit("t")), "t", Map("t" -> "k"))("t")
+      assert(plan.rows == 64)
+      assert(plan.buckets == df.select(store.bucket(df, "k")).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted)
+      store.upsert("t", df, "k", "ts", Some(plan.buckets))
+    }
+    val r = store.read("t").get
+    assert(r.count() == 64 && r.select("k").distinct().count() == 64, "no duplicate keys")
+    assert(r.filter(col("v").startsWith("dec")).count() == 64, "the newest batch wins every key")
+    new java.io.File(s"$base/t").listFiles().filter(_.getName.startsWith("graft_bucket=")).foreach { d =>
+      val rows = spark.read.parquet(d.getPath)
+      assert(rows.select(store.bucket(rows, "k")).distinct().collect().map(_.getInt(0)).toSeq ==
+        Seq(d.getName.stripPrefix("graft_bucket=").toInt), s"rows of $d placed by another bucket")
+    }
+    // a touched set that misses a bucket fails before anything is swapped
+    val before = store.read("t").get.collect().map(_.toSeq).toSet
+    val e = intercept[IllegalStateException] {
+      store.upsert("t", batches.head, "k", "ts", Some(Seq(0)))
+    }
+    assert(e.getMessage.contains("outside the touched set"))
+    assert(store.read("t").get.collect().map(_.toSeq).toSet == before, "store unchanged")
+  }
 }

@@ -1,8 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.streaming.WarehouseJob
+import scala.jdk.CollectionConverters._
 
 /** End-to-end streaming warehouse over a file-source replay of the real
   * sf0.001 events table: ODS(file topic) → DWD(parse/split/route) →
@@ -237,5 +239,58 @@ class WarehouseJobSpec extends SparkSpecBase {
         s"expected the loud misroute guard, got: ${messages(e).mkString(" | ")}")
       q.stop()
     } finally spark.conf.unset("spark.graft.maxDimBatchRows")
+  }
+
+  test("every job of batch N carries batch id N; a steady batch runs 11 jobs") {
+    // (start time, query id, batch id, drain marker) of every job
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        jobs.add((e.time, prop("sql.streaming.queryId"), prop("streaming.sql.batchId"),
+          prop("graft.test.drain")))
+        ()
+      }
+    }
+    val events = Tables.events(spark, sf("sf0.001")).localCheckpoint()
+    val src = Files.createTempDirectory("whj_src").toString
+    val job = new WarehouseJob(spark, Files.createTempDirectory("whj_out").toString)
+    spark.sparkContext.addSparkListener(listener)
+    val q = job.start(src, Files.createTempDirectory("whj_ckpt").toString)
+    try {
+      // three batches, each a few files: no batch lists its files in a job
+      (0 until 3).foreach { i =>
+        events.filter(pmod(col("event_id"), lit(3)) === i).write.mode("append").parquet(src)
+        q.processAllAvailable()
+      }
+      q.stop()
+      // the listener bus delivers in order: once this marker job is seen,
+      // every earlier job start has been delivered too
+      spark.sparkContext.setLocalProperty("graft.test.drain", "1")
+      try spark.range(1).count() finally spark.sparkContext.setLocalProperty("graft.test.drain", null)
+      val deadline = System.nanoTime() + 30e9
+      while (!jobs.asScala.exists(_._4 == "1")) {
+        assert(System.nanoTime() < deadline, "listener bus did not drain")
+        Thread.sleep(20)
+      }
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.map(_.batchId).toSeq == Seq(0L, 1L, 2L))
+    batches.foreach { p =>
+      val start = java.time.Instant.parse(p.timestamp).toEpochMilli
+      val end = start + p.durationMs.get("triggerExecution").longValue
+      val inside = jobs.asScala.filter(j => j._1 >= start && j._1 <= end).toSeq
+      assert(inside.nonEmpty)
+      assert(inside.forall(j => j._2 == q.id.toString && j._3 == p.batchId.toString),
+        s"batch ${p.batchId} ran jobs carrying (query, batch) " +
+          inside.map(j => s"(${j._2}, ${j._3})").distinct.mkString(", "))
+    }
+    // the job count of one steady batch (dirty, route+plan, facts, dim ×2,
+    // stats): a regression gate on the warehouse's per-batch fixed cost
+    val steady = jobs.asScala.count(j => j._2 == q.id.toString && j._3 == "2")
+    assert(steady == 11, s"steady batch ran $steady jobs")
   }
 }
